@@ -42,8 +42,7 @@ object SqlTemplates {
     val need = positionalArity(sqlText)
     if (args.length < need)
       throw new IllegalArgumentException(s"Missing parameter: p${args.length + 1}")
-    Tables.registerViews(spark, dir)
-    spark.sql(sqlText, args.toArray)
+    Tables.withViews(spark, dir)(spark.sql(sqlText, args.toArray))
   }
 
   /** Run a template with named args. Missing names fail with the
@@ -55,8 +54,7 @@ object SqlTemplates {
     namedVars(sqlText).foreach(v =>
       if (!args.contains(v))
         throw new IllegalArgumentException(s"""Parameter "$v" is required!"""))
-    Tables.registerViews(spark, dir)
-    spark.sql(sqlText, args)
+    Tables.withViews(spark, dir)(spark.sql(sqlText, args))
   }
 
   /** Typed error envelope — the reference wraps every result as

@@ -40,10 +40,8 @@ object SubqueryOps {
   // query IS the oracle, so the gate checks Catalyst's decorrelation
   // against DuckDB's independent subquery implementation on the
   // identical text.
-  private def sqlQ(text: String): Q = (spark, dir) => {
-    Tables.registerViews(spark, dir)
-    spark.sql(text)
-  }
+  private def sqlQ(text: String): Q = (spark, dir) =>
+    Tables.withViews(spark, dir)(spark.sql(text))
 
   private val sharedSql: Map[String, String] = Map(
     // Q4 shape: EXISTS with an outer-column comparison inside the

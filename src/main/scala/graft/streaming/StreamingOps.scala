@@ -98,6 +98,30 @@ object StreamingOps {
     replayDir
   }
 
+  /** Stream the files staged under `staged` with fixture table `name`'s
+    * on-disk schema (pre ts-conversion) from the fixture catalog.
+    */
+  private def replaySource(spark: SparkSession, dir: String, name: String,
+      staged: java.nio.file.Path): DataFrame =
+    spark.readStream.schema(Tables.raw(spark, dir, name).schema)
+      .format("parquet").load(staged.toString)
+
+  /** Ship one day of a replay: write `half` as a single parquet file
+    * `<tag>.parquet` into the watched `replayDir` (moved in whole, so
+    * the stream never sees a partial file).
+    */
+  private def shipHalf(half: DataFrame, replayDir: java.nio.file.Path,
+      tag: String): Unit = {
+    val tmp = java.nio.file.Files.createTempDirectory(s"graft_stage_$tag")
+    half.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    import scala.jdk.CollectionConverters._
+    val part = java.nio.file.Files.list(tmp).iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet"))
+      .getOrElse(sys.error(s"no parquet part written for $tag"))
+    java.nio.file.Files.move(part, replayDir.resolve(s"$tag.parquet"))
+    dropReplayDir(tmp)
+  }
+
   private def dropReplayDir(p: java.nio.file.Path): Unit = {
     import scala.jdk.CollectionConverters._
     java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
@@ -107,13 +131,8 @@ object StreamingOps {
   private def runEventsStream(spark: SparkSession, dir: String,
       queryName: String, replayDir: java.nio.file.Path)(
       transform: DataFrame => DataFrame): StreamingQuery = {
-    // raw parquet schema (pre ts-conversion): stream sees what's on disk
-    val batchSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream = spark.readStream
-      .schema(batchSchema)
-      .format("parquet")
-      .load(replayDir.toString)
-    val resolved = Tables.normalizeTs(stream)
+    val resolved =
+      Tables.normalizeTs(replaySource(spark, dir, "events", replayDir))
     transform(resolved.withWatermark("ts", "10 minutes"))
       .writeStream
       .outputMode("complete")
@@ -227,10 +246,8 @@ object StreamingOps {
   private def drainClickViewPairs(spark: SparkSession,
       dir: String): DataFrame = {
     val staged = stageReplay(dir, "events.parquet")
-    val batchSchema = spark.read.parquet(s"$dir/events.parquet").schema
     def source(): DataFrame =
-      Tables.normalizeTs(spark.readStream
-        .schema(batchSchema).format("parquet").load(staged.toString))
+      Tables.normalizeTs(replaySource(spark, dir, "events", staged))
     val clicks = source().where(col("event_type") === "click")
       .select(col("user_id"), col("ts"), col("event_id").as("c_event"))
     val views = source().where(col("event_type") === "view")
@@ -297,22 +314,10 @@ object StreamingOps {
       stateStoreProvider: Option[String] = None): DataFrame = {
     val replayDir = java.nio.file.Files.createTempDirectory("graft_resume")
     val cpDir = java.nio.file.Files.createTempDirectory("graft_resume_cp")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    val schema = raw.schema
-    def ship(half: DataFrame, tag: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_stage_$tag")
-      half.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      import scala.jdk.CollectionConverters._
-      val part = java.nio.file.Files.list(tmp).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no parquet part written for $tag"))
-      java.nio.file.Files.move(part, replayDir.resolve(s"$tag.parquet"))
-      dropReplayDir(tmp)
-    }
+    val raw = Tables.raw(spark, dir, "events")
     def start(name: String): StreamingQuery = {
-      val stream = spark.readStream
-        .schema(schema).format("parquet").load(replayDir.toString)
-      val resolved = Tables.normalizeTs(stream)
+      val resolved =
+        Tables.normalizeTs(replaySource(spark, dir, "events", replayDir))
       sessionize(resolved.withWatermark("ts", "10 minutes"))
         .writeStream
         .outputMode("complete")
@@ -326,10 +331,10 @@ object StreamingOps {
     stateStoreProvider.foreach(spark.conf.set(providerKey, _))
     try {
       val base = s"graft_resume_${replaySeq.incrementAndGet()}"
-      ship(raw.where(col("event_id") % 2 === 0), "day1")
+      shipHalf(raw.where(col("event_id") % 2 === 0), replayDir, "day1")
       val q1 = start(s"${base}_a")
       try q1.processAllAvailable() finally q1.stop() // planned "crash"
-      ship(raw.where(col("event_id") % 2 === 1), "day2")
+      shipHalf(raw.where(col("event_id") % 2 === 1), replayDir, "day2")
       val q2 = start(s"${base}_b")
       try q2.processAllAvailable() finally q2.stop()
       // the memory sink table is materialized in-memory; safe to drop
@@ -362,11 +367,9 @@ object StreamingOps {
     val docs = Tables.load(spark, dir, "documents")
     val evalSets = graft.operators.DedupOps.evalShingleSets(docs)
     val replayDir = stageReplay(dir, "documents.parquet")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val stream = spark.readStream
-      .schema(schema).format("parquet").load(replayDir.toString)
-    val evs = stream.select(xxhash64(col("text")).as("fingerprint"),
-      col("doc_id"), col("text")).as[DocEvent]
+    val evs = replaySource(spark, dir, "documents", replayDir)
+      .select(xxhash64(col("text")).as("fingerprint"), col("doc_id"),
+        col("text")).as[DocEvent]
     val name = s"graft_replay_${replaySeq.incrementAndGet()}"
     val q = qualityGateStream(evs, evalSets)
       .writeStream.outputMode("append").format("memory")
@@ -398,9 +401,7 @@ object StreamingOps {
     // GD trajectory (a Spark job per iteration) on every invocation
     val w = QualityModelOps.trainedWeights(spark, dir)
     val replayDir = stageReplay(dir, "documents.parquet")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val stream = spark.readStream
-      .schema(schema).format("parquet").load(replayDir.toString)
+    val stream = replaySource(spark, dir, "documents", replayDir)
     val name = s"graft_replay_${replaySeq.incrementAndGet()}"
     val q = QualityModelOps.score(stream, w)
       .writeStream.outputMode("append").format("memory")
@@ -483,9 +484,7 @@ object StreamingOps {
     val cust = Tables.load(spark, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
     val staged = stageReplay(dir, "events.parquet")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream = Tables.normalizeTs(spark.readStream
-      .schema(schema).format("parquet").load(staged.toString))
+    val stream = Tables.normalizeTs(replaySource(spark, dir, "events", staged))
     val name = s"graft_replay_${replaySeq.incrementAndGet()}"
     // append mode: the join is stateless, so rows emit as they arrive —
     // no watermark, no state store (the helper's complete-mode sink is
@@ -550,9 +549,7 @@ object StreamingOps {
   def replayUpsertStream(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val staged = stageReplay(dir, "orders.parquet")
-    val schema = spark.read.parquet(s"$dir/orders.parquet").schema
-    val compacted = compactUpserts(spark.readStream
-      .schema(schema).format("parquet").load(staged.toString)
+    val compacted = compactUpserts(replaySource(spark, dir, "orders", staged)
       .select(col("o_custkey").cast("long"), col("o_orderkey").cast("long"),
         col("o_totalprice").cast("double"))
       .as[(Long, Long, Double)])
@@ -588,9 +585,7 @@ object StreamingOps {
   def replayDedupStream(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val staged = stageReplay(dir, "documents.parquet")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val events = spark.readStream
-      .schema(schema).format("parquet").load(staged.toString)
+    val events = replaySource(spark, dir, "documents", staged)
       .select(graft.functions.TextShingles.md5Hash60(col("text"))
         .as("fingerprint"), col("doc_id"), col("text"))
       .as[DocEvent]
@@ -623,9 +618,7 @@ object StreamingOps {
   def replayPublishStream(spark: SparkSession, dir: String,
       root: String): Unit = {
     val staged = stageReplay(dir, "documents.parquet")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val stream = spark.readStream
-      .schema(schema).format("parquet").load(staged.toString)
+    val stream = replaySource(spark, dir, "documents", staged)
       .select("doc_id", "lang", "source", "n_chars")
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -669,21 +662,9 @@ object StreamingOps {
       compactBetweenDays: Boolean = false): Unit = {
     val replayDir = java.nio.file.Files.createTempDirectory("graft_ingest")
     val cpDir = java.nio.file.Files.createTempDirectory("graft_ingest_cp")
-    val raw = spark.read.parquet(s"$dir/documents.parquet")
-    val schema = raw.schema
-    def ship(half: DataFrame, tag: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_ingest_$tag")
-      half.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      import scala.jdk.CollectionConverters._
-      val part = java.nio.file.Files.list(tmp).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no parquet part written for $tag"))
-      java.nio.file.Files.move(part, replayDir.resolve(s"$tag.parquet"))
-      dropReplayDir(tmp)
-    }
-    ship(raw.where(col("doc_id") % 2 === 0), "day1")
-    val q = spark.readStream
-      .schema(schema).format("parquet").load(replayDir.toString)
+    val raw = Tables.raw(spark, dir, "documents")
+    shipHalf(raw.where(col("doc_id") % 2 === 0), replayDir, "day1")
+    val q = replaySource(spark, dir, "documents", replayDir)
       .writeStream
       .option("checkpointLocation", cpDir.toString)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -705,7 +686,7 @@ object StreamingOps {
         // any day-1 replay) behaves exactly as without the fold
         graft.operators.DedupOps.compactLshIndex(spark, prefix)
       }
-      ship(raw.where(col("doc_id") % 2 === 1), "day2")
+      shipHalf(raw.where(col("doc_id") % 2 === 1), replayDir, "day2")
       q.processAllAvailable() // batch 1 = day 2
     } finally {
       q.stop()
@@ -772,18 +753,8 @@ object StreamingOps {
     val docs = graft.Tables.load(spark, dir, "documents")
     val w = QualityModelOps.trainedWeights(spark, dir)
     val tokCounts = CorpusOps.bpeTokenCounts(spark, dir)
-    def ship(half: DataFrame, tag: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_pipe_$tag")
-      WarcOps.synthWarcFilesGz(half)
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      import scala.jdk.CollectionConverters._
-      val part = java.nio.file.Files.list(tmp).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no parquet part written for $tag"))
-      java.nio.file.Files.move(part, replayDir.resolve(s"$tag.parquet"))
-      dropReplayDir(tmp)
-    }
-    ship(docs.where(col("doc_id") < PipelineSplitId), "day1")
+    shipHalf(WarcOps.synthWarcFilesGz(
+      docs.where(col("doc_id") < PipelineSplitId)), replayDir, "day1")
     val blobSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("warc_file",
         org.apache.spark.sql.types.LongType),
@@ -801,7 +772,8 @@ object StreamingOps {
       .start()
     try {
       q.processAllAvailable() // batch 0 = day 1
-      ship(docs.where(col("doc_id") >= PipelineSplitId), "day2")
+      shipHalf(WarcOps.synthWarcFilesGz(
+        docs.where(col("doc_id") >= PipelineSplitId)), replayDir, "day2")
       q.processAllAvailable() // batch 1 = day 2
     } finally {
       q.stop()
@@ -950,21 +922,9 @@ object StreamingOps {
     SimilarityOps.initIvfIndexVersioned(spark,
       SimilarityOps.buildIvfIndex(spark, dir).centroids, path)
     val emb = graft.Tables.load(spark, dir, "embeddings")
-    val schema = emb.schema
-    def ship(half: DataFrame, tag: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_ivf_$tag")
-      half.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      import scala.jdk.CollectionConverters._
-      val part = java.nio.file.Files.list(tmp).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no parquet part written for $tag"))
-      java.nio.file.Files.move(part, replayDir.resolve(s"$tag.parquet"))
-      dropReplayDir(tmp)
-    }
     val day1 = emb.where(col("vec_id") % 2 === 0)
-    ship(day1, "day1")
-    val q = spark.readStream
-      .schema(schema).format("parquet").load(replayDir.toString)
+    shipHalf(day1, replayDir, "day1")
+    val q = replaySource(spark, dir, "embeddings", replayDir)
       .writeStream
       .option("checkpointLocation", cpDir.toString)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -978,7 +938,7 @@ object StreamingOps {
       // batch must be swallowed by the epoch guard, not double-indexed
       require(!SimilarityOps.appendToIvfIndexVersioned(day1, path, 0L),
         "replayed batch 0 was not suppressed by the IVF epoch marker")
-      ship(emb.where(col("vec_id") % 2 === 1), "day2")
+      shipHalf(emb.where(col("vec_id") % 2 === 1), replayDir, "day2")
       q.processAllAvailable() // batch 1 = day 2
       // quiescent-point maintenance: fold both batch dirs into one;
       // lastBatch survives, so a pre-compaction replay stays a no-op
